@@ -236,44 +236,16 @@ class DedupSimilaritySpec extends SparkSpec {
       transform(sequence(lit(0), lit(15)),
         d => sin(col("id") * 0.7 + d).cast("float")).as("embedding"))
     val q = vecs.filter(col("vec_id") % 16 === 0)
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.add(js.jobId)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // marker protocol: build the plan, then run one marker action.
-      // The listener bus delivers JobStart events in submission order,
-      // so once the marker's job is visible, any build-time job would
-      // be too. Returns the number of non-marker jobs.
-      def jobsDuring(build: => Any): Int = {
-        jobs.clear()
-        build
-        // RDD count = exactly ONE job (a DataFrame count is 2+ under
-        // AQE: shuffle map stage + result stage each get a job)
-        spark.sparkContext.parallelize(Seq(1), 1).count()
-        val deadline = System.currentTimeMillis() + 10000
-        var last = -1
-        while (System.currentTimeMillis() < deadline &&
-          (jobs.isEmpty || jobs.size != last)) {
-          last = jobs.size; Thread.sleep(50)
-        }
-        assert(!jobs.isEmpty, "marker job never observed")
-        jobs.size - 1
-      }
-      assert(jobsDuring(Similarity.lshNearDupPairs(
-        vecs, "vec_id", "embedding", minCos = 0.9, dim = 16, nHint = 64L)) === 0)
-      assert(jobsDuring(Similarity.lshTopK(
-        vecs, q, "vec_id", "embedding", k = 3, dim = 16, nHint = 64L)) === 0)
-      assert(jobsDuring(Similarity.ivfTopK(
-        vecs, q, "vec_id", "embedding", k = 3, nHint = 64L)) === 0)
-      // without the hint the auto branch pays exactly the documented
-      // plan-build-time count job
-      assert(jobsDuring(Similarity.lshNearDupPairs(
-        vecs, "vec_id", "embedding", minCos = 0.9, dim = 16)) >= 1)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobsDuring(Similarity.lshNearDupPairs(
+      vecs, "vec_id", "embedding", minCos = 0.9, dim = 16, nHint = 64L)) === 0)
+    assert(jobsDuring(Similarity.lshTopK(
+      vecs, q, "vec_id", "embedding", k = 3, dim = 16, nHint = 64L)) === 0)
+    assert(jobsDuring(Similarity.ivfTopK(
+      vecs, q, "vec_id", "embedding", k = 3, nHint = 64L)) === 0)
+    // without the hint the auto branch pays exactly the documented
+    // plan-build-time count job
+    assert(jobsDuring(Similarity.lshNearDupPairs(
+      vecs, "vec_id", "embedding", minCos = 0.9, dim = 16)) >= 1)
     // and the hint changes only WHEN the size is learned, not results
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("id_a", "id_b", "cosine").as[(Long, Long, Double)].collect().toSet
@@ -710,45 +682,23 @@ class DedupSimilaritySpec extends SparkSpec {
       transform(sequence(lit(0), lit(15)),
         d => sin(col("id") * 1.39 + d).cast("float")).as("embedding"))
     val q = vecs.filter(col("vec_id") % 16 === 0)
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.add(js.jobId)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      def jobsDuring(build: => Any): Int = {
-        jobs.clear()
-        build
-        spark.sparkContext.parallelize(Seq(1), 1).count()
-        val deadline = System.currentTimeMillis() + 10000
-        var last = -1
-        while (System.currentTimeMillis() < deadline &&
-          (jobs.isEmpty || jobs.size != last)) {
-          last = jobs.size; Thread.sleep(50)
-        }
-        assert(!jobs.isEmpty, "marker job never observed")
-        jobs.size - 1
-      }
-      // the bench regime (sf0.1: |D|=2000, |Q|=100): weak and
-      // clustered curves BOTH say brute, so with size hints the
-      // decision costs zero jobs — no probe, no count, nothing
-      assert(jobsDuring(Similarity.annTierAuto(vecs, q, "vec_id",
-        "embedding", hasIndex = false, nHint = 2000L, qHint = 100L))
-        === 0, "agree regime must not probe")
-      // disagree regime (|D|=60k, |Q|=1000, indexed: weak says brute,
-      // clustered says indexed): the structure probe pays its bounded
-      // sample jobs exactly ONCE...
-      val first = jobsDuring(Similarity.annTierAuto(vecs, q, "vec_id",
-        "embedding", hasIndex = true, nHint = 60000L, qHint = 1000L))
-      assert(first >= 1, "disagree regime must probe")
-      // ...and the SAME corpus (canonicalized-plan identity) re-asked
-      // serves the memoized margin with zero jobs
-      assert(jobsDuring(Similarity.annTierAuto(vecs, q, "vec_id",
-        "embedding", hasIndex = true, nHint = 60000L, qHint = 1000L))
-        === 0, "second probe of the same corpus must hit the memo")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // the bench regime (sf0.1: |D|=2000, |Q|=100): weak and
+    // clustered curves BOTH say brute, so with size hints the
+    // decision costs zero jobs — no probe, no count, nothing
+    assert(jobsDuring(Similarity.annTierAuto(vecs, q, "vec_id",
+      "embedding", hasIndex = false, nHint = 2000L, qHint = 100L))
+      === 0, "agree regime must not probe")
+    // disagree regime (|D|=60k, |Q|=1000, indexed: weak says brute,
+    // clustered says indexed): the structure probe pays its bounded
+    // sample jobs exactly ONCE...
+    val first = jobsDuring(Similarity.annTierAuto(vecs, q, "vec_id",
+      "embedding", hasIndex = true, nHint = 60000L, qHint = 1000L))
+    assert(first >= 1, "disagree regime must probe")
+    // ...and the SAME corpus (canonicalized-plan identity) re-asked
+    // serves the memoized margin with zero jobs
+    assert(jobsDuring(Similarity.annTierAuto(vecs, q, "vec_id",
+      "embedding", hasIndex = true, nHint = 60000L, qHint = 1000L))
+      === 0, "second probe of the same corpus must hit the memo")
   }
 
   test("trainCentroids: DECIMAL-exact means are bit-deterministic across runs") {
